@@ -226,8 +226,8 @@ def test_partitioning_is_timezone_independent(spark, tmp_path):
 
 
 def test_auto_compaction_bounds_commit_count(spark, tmp_path):
-    """50 write batches: the snapshot plan's union-branch count (live
-    commit dirs) must stay bounded by the auto-compaction threshold, and
+    """50 write batches: the live commit dirs (the files a snapshot
+    reads per day) must stay bounded by the auto-compaction threshold, and
     no data may be lost across compaction cycles."""
     t = TsTable.create(spark, str(tmp_path / "auto"), auto_compact_commits=6)
     for i in range(50):
@@ -381,6 +381,54 @@ def test_crash_between_manifest_and_pointer_swap_recovers(
     # version slot unblocked: the next write proceeds normally
     t.insert(mk(spark, [(T0 + 2, "after", 2.0)]))
     assert (T0 + 2, "after", 2.0) in rows_of(t)
+
+
+def test_engine_open_recovers_interrupted_commit(spark, tmp_path, monkeypatch):
+    """A crash between manifest link and pointer swap leaves the next
+    version slot taken; a freshly opened TsdbEngine must roll it forward
+    instead of raising ConcurrentWriteError on its first write."""
+    from timeseries_db_spark.engine import TsdbEngine
+
+    path = str(tmp_path / "reopen")
+    TsdbEngine(spark, path).insert([(T0, "a", 1.0)])
+
+    def crash(self, new_version):
+        raise RuntimeError("simulated crash before pointer swap")
+
+    monkeypatch.setattr(TsTable, "_advance_pointer", crash)
+    with pytest.raises(RuntimeError):
+        TsdbEngine(spark, path).insert([(T0 + 1, "a", 2.0)])
+    monkeypatch.undo()
+    reopened = TsdbEngine(spark, path)
+    reopened.insert([(T0 + 2, "b", 3.0)])
+    assert rows_of(reopened.table) == {
+        (T0, "a", 1.0), (T0 + 1, "a", 2.0), (T0 + 2, "b", 3.0),
+    }
+
+
+def test_manifest_interns_tag_sets(spark, tmp_path):
+    """Each distinct leaf tag set is stored once per manifest; loading
+    decodes it back to {leaf: tags | None}, and manifests written with
+    inline tag lists still load."""
+    import json as _json
+
+    t = TsTable.create(spark, str(tmp_path / "intern"))
+    for k in range(3):  # same two tags, three commits, two days each
+        t.insert(mk(spark, [(T0 + k, "a", 1.0), (T0 + DAY + k, "b", 2.0),
+                            (T0 + k + 10, "b", 3.0), (T0 + DAY + k + 10, "a", 4.0)]))
+    with open(t._manifest_path(t.version())) as f:
+        raw = _json.load(f)
+    assert raw["tag_sets"] == [["a", "b"]]
+    assert sorted(raw["tag_stats"].values()) == [0] * 6
+    decoded = t._manifest()["tag_stats"]
+    assert decoded == {leaf: ["a", "b"] for leaf in raw["tag_stats"]}
+    # the earlier inline form reads the same
+    inline = {k: v for k, v in raw.items() if k != "tag_sets"}
+    inline["tag_stats"] = decoded
+    with open(t._manifest_path(t.version()), "w") as f:
+        _json.dump(inline, f)
+    assert t._manifest()["tag_stats"] == decoded
+    assert t.exists(tag="a") and not t.exists(tag="c")
 
 
 def test_vacuum_retention_window(spark, tmp_path):

@@ -1,0 +1,184 @@
+"""The query read path: one snapshot relation per query, and presence
+probes only when the answer is empty.
+
+* a hit costs the same Spark jobs at 1 and at 8 live commits (the
+  snapshot is one parquet relation over the manifest's leaf dirs);
+* ``TsdbEngine.query_json`` — answer first, manifest-pruned probes —
+  keeps exactly the error contract of the eager ``run_query`` over the
+  whole table, including a leaf whose tag set is too large for stats.
+"""
+
+from __future__ import annotations
+
+import math
+import uuid
+
+import pytest
+from hypothesis import HealthCheck, assume, example, given, settings
+from pyspark.sql import functions as F
+
+from tests.test_property import qm_strategy
+from timeseries_db_spark import wire
+from timeseries_db_spark.engine import TsdbEngine
+from timeseries_db_spark.operators.dml import TsTable
+from timeseries_db_spark.plans.compiler import GROUP_COL, RESULT_COL, run_query
+from timeseries_db_spark.schema import (
+    TS_SCHEMA,
+    Agg,
+    GroupBy,
+    IllegalQueryError,
+    QueryError,
+    QueryModel,
+    Sort,
+)
+from timeseries_db_spark.sources.fixture import BASE_TS, timeseries_fixture
+
+T0 = 1704067200000  # 2024-01-01T00:00:00Z
+DAY = 86_400_000
+MINUTE = 60_000
+
+
+def _batch(k: int) -> list[dict]:
+    """Batch ``k``: 16 fresh minutes × 4 tags on each of two days."""
+    return [
+        {"timestamp": T0 + d * DAY + (16 * k + m) * MINUTE, "tag": tag,
+         "value": float(k + m)}
+        for d in range(2)
+        for m in range(16)
+        for tag in ("a", "b", "c", "d")
+    ]
+
+
+def _jobs(spark, fn):
+    """(result or QueryError text, Spark jobs ``fn`` launched)."""
+    sc = spark.sparkContext
+    group = f"jobpin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        try:
+            out = fn()
+        except QueryError as exc:
+            out = str(exc)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_hit_jobs_do_not_grow_with_live_commits(spark, tmp_path):
+    path = str(tmp_path / "pin")
+    table = TsTable.create(spark, path, auto_compact_commits=0)
+    eng = TsdbEngine(spark, path)
+    eng.table = table
+    hits = {
+        "point": {"tsEq": T0 + DAY + 5 * MINUTE, "tagEq": "b"},
+        "rows": {"tagEq": "a", "ge": T0, "le": T0 + DAY, "limit": 20},
+    }
+    misses = {
+        "tag": ({"tagEq": "Oslo"}, wire.no_data_tag("Oslo")),
+        "ts": ({"tsEq": T0 + 7, "tagEq": "a"}, wire.no_data_ts(T0 + 7)),
+        "avg": ({"aggFunc": "avg", "gt": T0 + 10 * DAY}, wire.avg_failed()),
+    }
+    jobs: dict[int, dict[str, int]] = {}
+    for commits in (1, 8):
+        while table.live_commit_count() < commits:
+            eng.insert(_batch(table.live_commit_count()))
+        assert table.live_commit_count() == commits
+        jobs[commits] = {}
+        for name, q in hits.items():
+            out, jobs[commits][name] = _jobs(spark, lambda: eng.query_json(q))
+            assert isinstance(out, list) and out, (commits, name, out)
+        assert _jobs(spark, lambda: eng.query_json(hits["point"]))[0] == [
+            {"timestamp": T0 + DAY + 5 * MINUTE, "tag": "b", "value": 5.0}
+        ]
+        for name, (q, text) in misses.items():
+            with pytest.raises(QueryError) as exc:
+                eng.query_json(q)
+            assert str(exc.value) == text, (commits, name)
+    assert jobs[1] == jobs[8], jobs
+    assert max(jobs[1].values()) <= 2, jobs
+
+
+# ---------- contract equivalence: query_json vs eager run_query ----------
+
+
+@pytest.fixture(scope="module")
+def three_commit_table(spark, tmp_path_factory):
+    """The property fixture's rows in three commits on one UTC day; the
+    third also holds more than TAG_STATS_MAX tags, so its leaf has no
+    tag stats and tag probes fall back to a scan."""
+    path = str(tmp_path_factory.mktemp("equiv") / "t")
+    rows = timeseries_fixture(spark, 5_000)
+    ts = F.col("timestamp") - BASE_TS
+    table = TsTable.create(spark, path, rows.filter(ts < 2_000))
+    table.insert(rows.filter((ts >= 2_000) & (ts < 4_000)))
+    wide = spark.createDataFrame(
+        [(BASE_TS + 4_000 + k, f"x{k:02d}", float(k))
+         for k in range(TsTable.TAG_STATS_MAX + 6)],
+        TS_SCHEMA,
+    )
+    table.insert(rows.filter(ts >= 4_000).unionByName(wide))
+    stats = table._manifest()["tag_stats"]
+    assert len(stats) == 3 and sum(v is None for v in stats.values()) == 1
+    return table
+
+
+def _wire(qm: QueryModel, rows):
+    """Spark rows of ``compile_query`` in ``query_json``'s wire shape."""
+    if qm.agg_func is None:
+        return [{"timestamp": r["timestamp"], "tag": r["tag"], "value": r["value"]}
+                for r in rows]
+    if qm.group_by is None:
+        return {"result": rows[0][RESULT_COL] if rows else None}
+    return [{"group": r[GROUP_COL], "result": r[RESULT_COL]} for r in rows]
+
+
+def _close(a, b) -> bool:
+    """Equal up to float summation order (pruned and whole-table scans
+    may add in different orders)."""
+    if isinstance(a, float) and isinstance(b, float):
+        return math.isclose(a, b, rel_tol=1e-9)
+    if isinstance(a, list) and isinstance(b, list):
+        return len(a) == len(b) and all(_close(x, y) for x, y in zip(a, b))
+    if isinstance(a, dict) and isinstance(b, dict):
+        return a.keys() == b.keys() and all(_close(a[k], b[k]) for k in a)
+    return a == b
+
+
+def _fields(**given_fields) -> dict:
+    base = dict.fromkeys(("gt", "ge", "lt", "le", "ts_eq", "tag_eq", "agg_func",
+                          "group_by", "limit"))
+    return {**base, "sort": Sort.ASC, **given_fields}
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow,
+        HealthCheck.function_scoped_fixture,
+        HealthCheck.filter_too_much,
+    ],
+)
+@given(fields=qm_strategy)
+# the misses always run: the Oslo tag probe must take the scan fallback
+# (the wide leaf has no stats), plus a key miss and an empty average
+@example(fields=_fields(tag_eq="Oslo", limit=0))
+@example(fields=_fields(tag_eq="Oslo", agg_func=Agg.COUNT, group_by=GroupBy.TAG))
+@example(fields=_fields(tag_eq="Munich", ts_eq=BASE_TS + 1))
+@example(fields=_fields(agg_func=Agg.AVG, gt=BASE_TS + 10_000))
+def test_query_json_keeps_the_eager_error_contract(spark, three_commit_table, fields):
+    try:
+        qm = QueryModel(**fields)
+    except IllegalQueryError:
+        assume(False)
+    table = three_commit_table
+
+    def outcome(fn):
+        try:
+            return "ok", fn()
+        except QueryError as exc:
+            return "error", str(exc)
+
+    eager = outcome(lambda: _wire(qm, run_query(table.read(), qm).collect()))
+    got = outcome(lambda: TsdbEngine(spark, table.path).query_json(qm))
+    assert got[0] == eager[0] and _close(got[1], eager[1]), (fields, got, eager)

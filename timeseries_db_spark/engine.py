@@ -28,6 +28,7 @@ commits, snapshot-isolated readers), queries compile through
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Iterable, Mapping
 
@@ -38,7 +39,6 @@ from timeseries_db_spark.plans.compiler import (
     GROUP_COL,
     RESULT_COL,
     compile_query,
-    needs_presence_probe,
     run_query,
 )
 from timeseries_db_spark.schema import (
@@ -58,6 +58,10 @@ class TsdbEngine:
         self.spark = spark
         if os.path.exists(os.path.join(path, "_VERSION")):
             self.table = TsTable(spark, path)
+            # a writer that crashed between manifest link and pointer
+            # swap leaves the next version slot taken; roll it forward
+            # or every write here would raise ConcurrentWriteError
+            self.table.recover()
         else:
             self.table = TsTable.create(spark, path)
 
@@ -128,33 +132,40 @@ class TsdbEngine:
 
     # ---------- read route ----------
 
-    def query(self, qm, *, strict: bool = True) -> DataFrame:
-        """``POST /timeseries/query`` — accepts a :class:`QueryModel` or the
-        reference's camelCase JSON dict; returns the result DataFrame in
-        one of the three ``QueryR`` shapes. ``strict`` enforces the
-        data-dependent error contract (SURVEY.md §2.5).
+    def _snapshot(self, qm):
+        """Parse ``qm`` and pin the current version: returns the query
+        model, the snapshot relation pruned to the query's bounds, and a
+        presence probe over the same version — so a probe can never see
+        a write the answer did not.
 
         The query's timestamp bounds prune date partitions at the
         manifest level before the plan is even built (TsTable.read) —
         the storage-side replacement for the reference's in-memory
         timestamp index probe; a tagEq query additionally prunes leaf
         dirs on the manifest's per-leaf tag stats (r9 — the TagIndex
-        analog). The presence probe below stays unpruned: the error
-        contract distinguishes "tag absent from the table" from "tag
-        absent from the range", so the probe must see everything."""
+        analog). The probe (TsTable.exists) is pruned on its own terms:
+        the error contract distinguishes "tag absent from the table"
+        from "tag absent from the range", so it answers for the whole
+        snapshot, not the range."""
         if isinstance(qm, Mapping):
             qm = QueryModel.from_json(dict(qm))
+        version = self.table.version()
         lo_ms, hi_ms = qm.bounds_ms()
-        df = self.table.read(lo_ms=lo_ms, hi_ms=hi_ms, tag_eq=qm.tag_eq)
+        df = self.table.read(version, lo_ms=lo_ms, hi_ms=hi_ms, tag_eq=qm.tag_eq)
+        return qm, df, functools.partial(self.table.exists, version)
+
+    def query(self, qm, *, strict: bool = True) -> DataFrame:
+        """``POST /timeseries/query`` — accepts a :class:`QueryModel` or the
+        reference's camelCase JSON dict; returns the result DataFrame in
+        one of the three ``QueryR`` shapes. ``strict`` enforces the
+        data-dependent error contract (SURVEY.md §2.5) eagerly, before
+        the DataFrame is returned: a query that has a check to make
+        fetches its first row, and presence probes run only when that
+        shows an empty answer (:func:`run_query`)."""
+        qm, df, exists = self._snapshot(qm)
         if not strict:
             return compile_query(df, qm)
-        # presence probes (reference index-membership semantics) must see
-        # the unpruned table; built only when a probe will actually run —
-        # assembling the full multi-commit read costs file listings.
-        # needs_presence_probe is the shared condition, so construction
-        # and run_query's consumption can't drift apart.
-        probe = self.table.read() if needs_presence_probe(qm) else None
-        return run_query(df, qm, presence_df=probe)
+        return run_query(df, qm, exists=exists)
 
     def export(self, qm, path: str, *, fmt: str = "csv") -> None:
         """Uncapped result export — the reference client's CSV download
@@ -185,9 +196,11 @@ class TsdbEngine:
     def query_json(self, qm):
         """Reference wire format: the untagged ``QueryR`` union
         (``Model.hs:150-152``) as plain Python values."""
-        if isinstance(qm, Mapping):
-            qm = QueryModel.from_json(dict(qm))
-        out = self.query(qm).collect()
+        qm, df, exists = self._snapshot(qm)
+        # answer first: the error contract needs probes only when the
+        # answer is empty, so a hit costs the one collect
+        out = compile_query(df, qm).collect()
+        run_query(df, qm, exists=exists, answer=out)
         if qm.agg_func is None:
             return [
                 {"timestamp": r["timestamp"], "tag": r["tag"], "value": r["value"]}

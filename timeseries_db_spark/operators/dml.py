@@ -68,13 +68,14 @@ from timeseries_db_spark.schema import TS_SCHEMA
 KEY = ["timestamp", "tag"]
 MAX_ERRORS = 10  # reference: `take 10 errors`, Handlers.hs:55,65,89
 
-#: Auto-compaction threshold: the snapshot plan unions one parquet read
-#: per live commit dir, so an uncompacted table's read plan (and its
-#: file listings) grow linearly with write count. Once more than this
-#: many commit dirs are referenced by the current manifest, the write
-#: that crossed the line folds them back to one — amortized O(1) commits
-#: per read forever, same plan-size reasoning as Delta/Iceberg
-#: auto-OPTIMIZE.
+#: Auto-compaction threshold: a snapshot is one parquet relation over
+#: the manifest's leaf dirs, but every live commit adds one more small
+#: file (and one more listed dir) to each day it touched, so an
+#: uncompacted table's per-query file count grows linearly with write
+#: count. Once more than this many commit dirs are referenced by the
+#: current manifest, the write that crossed the line folds them back to
+#: one — amortized O(1) files per day partition, the same small-file
+#: reasoning as Delta/Iceberg auto-OPTIMIZE.
 AUTO_COMPACT_COMMITS = 16
 
 
@@ -139,9 +140,27 @@ class TsTable:
         with open(self._version_file) as f:
             return int(f.read().strip())
 
+    @staticmethod
+    def _load_manifest(path: str) -> dict:
+        """Read one manifest file — the single place manifests are
+        decoded. On disk each distinct leaf tag set is stored once in
+        ``tag_sets`` and ``tag_stats`` maps a leaf to its index (see
+        :meth:`_publish`); in memory ``tag_stats`` is always ``{leaf:
+        sorted tags | None}``. Manifests written before interning carry
+        the lists inline, and pre-r9 ones have no ``tag_stats`` at all;
+        both load unchanged."""
+        with open(path) as f:
+            m = json.load(f)
+        sets = m.pop("tag_sets", None)
+        if sets is not None and "tag_stats" in m:
+            m["tag_stats"] = {
+                leaf: None if i is None else sets[i]
+                for leaf, i in m["tag_stats"].items()
+            }
+        return m
+
     def _manifest(self) -> dict:
-        with open(self._manifest_path(self.version())) as f:
-            return json.load(f)
+        return self._load_manifest(self._manifest_path(self.version()))
 
     def _resolve_manifest(self, version: int) -> dict:
         """Range-checked, retention-aware manifest load — the single
@@ -151,8 +170,7 @@ class TsTable:
         if not 0 <= version <= current:
             raise ValueError(f"version {version} out of range [0, {current}]")
         try:
-            with open(self._manifest_path(version)) as f:
-                return json.load(f)
+            return self._load_manifest(self._manifest_path(version))
         except FileNotFoundError:
             raise ValueError(
                 f"version {version} has been vacuumed (retention window "
@@ -190,18 +208,26 @@ class TsTable:
         if tag_stats is None:
             tag_stats = self._manifest().get("tag_stats", {})
         live = {leaf for dirs in partitions.values() for leaf in dirs}
+        # intern tag sets: most leaves share one (every day of a table
+        # holds the same tags), so each distinct set is written once and
+        # leaves refer to it by index — manifests are never vacuumed by
+        # default, so their size is paid on every version
+        sets: dict[tuple[str, ...], int] = {}
         live_stats = {
-            leaf: tags for leaf, tags in tag_stats.items() if leaf in live
+            leaf: None if tags is None else sets.setdefault(tuple(tags), len(sets))
+            for leaf, tags in tag_stats.items()
+            if leaf in live
         }
         manifest = {
             "version": new_version,
             "partitions": partitions,
+            "tag_sets": [list(tags) for tags in sets],
             "tag_stats": live_stats,
         }
         mpath = self._manifest_path(new_version)
         tmp = mpath + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump(manifest, f)
+            json.dump(manifest, f, separators=(",", ":"))
             f.flush()
             os.fsync(f.fileno())
         try:
@@ -276,31 +302,22 @@ class TsTable:
     # ---------- read path ----------
 
     def _read_partitions(self, partitions: dict[str, list[str]], only: set[str] | None = None) -> DataFrame:
-        """Assemble the current snapshot (optionally restricted to a set of
-        ``dt`` partitions) from the manifest's commit directories. One read
-        per commit dir (each with its own basePath so the hive ``dt``
-        column survives), unioned — commit count stays small because
-        compaction folds history."""
-        by_commit: dict[str, list[str]] = {}
-        for dt, rel_dirs in partitions.items():
-            if only is not None and dt not in only:
-                continue
-            for rel in rel_dirs:
-                commit_dir = rel.split("/", 1)[0]
-                by_commit.setdefault(commit_dir, []).append(
-                    os.path.join(self.path, "commits", rel)
-                )
-        empty = self.spark.createDataFrame([], TS_SCHEMA)
-        out = _with_dt(empty)
-        for commit_dir, leaf_dirs in sorted(by_commit.items()):
-            base = os.path.join(self.path, "commits", commit_dir)
-            df = (
-                self.spark.read.option("basePath", base)
-                .parquet(*sorted(leaf_dirs))
-                .select("timestamp", "tag", "value", F.col("dt").cast("date").alias("dt"))
-            )
-            out = out.unionByName(df)
-        return out
+        """The snapshot ``(timestamp, tag, value)`` of the manifest's leaf
+        dirs (optionally restricted to a set of ``dt`` partitions) as ONE
+        parquet relation. The schema is given, so Spark infers nothing
+        and launches no job to build the plan; no ``dt`` column is
+        carried (writes recompute it from the timestamp). No leaf dirs →
+        an empty relation; ``limit(0)`` plans it as an empty local
+        relation, which Catalyst folds away without a job."""
+        leaf_dirs = sorted(
+            os.path.join(self.path, "commits", rel)
+            for dt, rels in partitions.items()
+            if only is None or dt in only
+            for rel in rels
+        )
+        if not leaf_dirs:
+            return self.spark.createDataFrame([], TS_SCHEMA).limit(0)
+        return self.spark.read.schema(TS_SCHEMA).parquet(*leaf_dirs)
 
     def read(
         self,
@@ -317,8 +334,8 @@ class TsTable:
 
         ``lo_ms``/``hi_ms`` (inclusive epoch-millis bounds) prune at the
         MANIFEST level: partitions whose date lies wholly outside the
-        range are never added to the plan — no file listing, no scan, no
-        union branch. The manifest is the engine's timestamp index (the
+        range are never added to the plan — no file listing, no scan.
+        The manifest is the engine's timestamp index (the
         scale analog of the reference's IntMap subtree pruning); callers
         still apply the exact row-level filter to the survivors.
 
@@ -356,9 +373,42 @@ class TsTable:
                 if (lo_d is None or _dt.date.fromisoformat(dt) >= lo_d)
                 and (hi_d is None or _dt.date.fromisoformat(dt) <= hi_d)
             }
-        return self._read_partitions(partitions, only=only).select(
-            "timestamp", "tag", "value"
-        )
+        return self._read_partitions(partitions, only=only)
+
+    def exists(
+        self,
+        version: int | None = None,
+        *,
+        tag: str | None = None,
+        ts: int | None = None,
+    ) -> bool:
+        """Presence probe: does the snapshot at ``version`` hold a row
+        with ``tag`` and/or timestamp ``ts``? The storage side of the
+        reference's index-membership lookups (``Tag.hs:58-67``,
+        ``TS.hs:57-65``), which ignore a query's range bounds.
+
+        A tag-only probe is answered from the manifest's tag stats, with
+        no Spark job, when some live leaf lists the tag or every live
+        leaf has stats. Otherwise the probe scans, pruned the way
+        :meth:`read` prunes: a ``ts`` probe reads only that timestamp's
+        day partition, and a ``tag`` probe only the leaves whose stats
+        do not exclude the tag."""
+        if ts is None:
+            m = self._manifest() if version is None else self._resolve_manifest(version)
+            stats = m.get("tag_stats", {})
+            known = [stats.get(leaf) for dirs in m["partitions"].values() for leaf in dirs]
+            if any(tags is not None and tag in tags for tags in known):
+                return True
+            if all(tags is not None for tags in known):
+                return False
+        pred = None
+        if tag is not None:
+            pred = F.col("tag") == F.lit(tag)
+        if ts is not None:
+            p = F.col("timestamp") == F.lit(ts)
+            pred = p if pred is None else pred & p
+        df = self.read(version, lo_ms=ts, hi_ms=ts, tag_eq=tag)
+        return not df.filter(pred).isEmpty()
 
     # ---------- write path ----------
 
@@ -648,10 +698,8 @@ class TsTable:
             if cutoff_day in manifest:
                 merged[cutoff_day] = list(manifest[cutoff_day])
         elif cutoff_day in manifest:
-            keep = (
-                self._read_partitions(manifest, only={cutoff_day})
-                .filter(F.col("timestamp") >= before_ms)
-                .select("timestamp", "tag", "value")
+            keep = self._read_partitions(manifest, only={cutoff_day}).filter(
+                F.col("timestamp") >= before_ms
             )
             # ONE evaluation of the boundary partition (ADVICE r8: a
             # limit(1).count() emptiness probe before the write read the
@@ -686,8 +734,7 @@ class TsTable:
         for entry in sorted(os.listdir(mdir), reverse=True):
             if not (entry.startswith("m") and entry.endswith(".json")):
                 continue
-            with open(os.path.join(mdir, entry)) as f:
-                m = json.load(f)
+            m = self._load_manifest(os.path.join(mdir, entry))
             if m["version"] > current:
                 continue
             parts = m["partitions"]
@@ -782,7 +829,7 @@ class TsTable:
 
     def live_commit_count(self) -> int:
         """Distinct commit dirs referenced by the current manifest — the
-        number of union branches in an unpruned snapshot plan."""
+        most files an unpruned snapshot reads per day partition."""
         return len(
             {
                 rel.split("/", 1)[0]
@@ -853,8 +900,7 @@ class TsTable:
         live: set[str] = set()
         for v in keep_versions:
             try:
-                with open(self._manifest_path(v)) as f:
-                    manifest = json.load(f)
+                manifest = self._load_manifest(self._manifest_path(v))
             except FileNotFoundError:
                 continue
             live |= {

@@ -36,6 +36,8 @@ Result shapes (``QueryR`` union, reference ``Model.hs:63-74``):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -108,6 +110,11 @@ def compile_query(df: DataFrame, qm: QueryModel) -> DataFrame:
         # (reference order within equal timestamps is insertion order —
         # nondeterministic for our purposes).
         out = df.select("timestamp", "tag", "value")
+        if qm.ts_eq is not None and qm.limit is None:
+            # one timestamp holds at most one row per tag: sort it in a
+            # single partition, skipping the range exchange (a sampling
+            # job and a map stage) a global sort would plan
+            out = out.coalesce(1)
         # (timestamp, tag, value) total order: (timestamp, tag) alone is a
         # key only under the tsdb uniqueness invariant — raw views built on
         # ms-truncated sources can carry ties, and a limit cutting through
@@ -149,8 +156,7 @@ def compile_query(df: DataFrame, qm: QueryModel) -> DataFrame:
 
 def needs_presence_probe(qm: QueryModel) -> bool:
     """True when the reference's dispatch would consult an index lookup
-    that can throw a presence error — the single source of truth shared
-    by :func:`run_query` and the engine's probe construction.
+    that can throw a presence error.
 
     Reference routing (``Utils.hs:93-96`` ``qmToQT`` →
     ``Tag.hs:58-67`` / ``TS.hs:57-65``):
@@ -167,12 +173,29 @@ def needs_presence_probe(qm: QueryModel) -> bool:
     return qm.ts_eq is not None and qm.group_by is not GroupBy.TAG
 
 
+def _is_scalar_avg(qm: QueryModel) -> bool:
+    return qm.agg_func is Agg.AVG and qm.group_by is None
+
+
+def _answer_is_empty(qm: QueryModel, rows: list) -> bool:
+    """Whether the collected answer of ``compile_query(df, qm)`` (all of
+    it, or just its first row) shows an empty selection: no rows or
+    groups, a scalar ``count`` of 0, or a NULL from any other scalar
+    aggregate. A tsdb table's values are never NULL, so a NULL ``sum``/
+    ``avg``/``min``/``max`` can only come from an empty selection."""
+    if qm.agg_func is None or qm.group_by is not None:
+        return not rows
+    result = rows[0][RESULT_COL] if rows else None
+    return result is None or (qm.agg_func is Agg.COUNT and result == 0)
+
+
 def run_query(
     df: DataFrame,
     qm: QueryModel,
     *,
     strict: bool = True,
-    presence_df: DataFrame | None = None,
+    exists: Callable[..., bool] | None = None,
+    answer: list | None = None,
 ) -> DataFrame:
     """Compile and, when ``strict``, enforce the reference's data-dependent
     error contract (SURVEY.md §2.5) before returning the plan:
@@ -182,46 +205,56 @@ def run_query(
     * ``avg`` over an empty selection → ``"Average failed."``
       (``Queries/Utils.hs:66-69``).
 
-    These checks cost an extra count job, so they are opt-in (strict) and
-    never run in benchmarks — mirroring SURVEY.md §7.4's guidance.
+    A non-empty answer already proves every presence the query names
+    (its rows passed the ``tagEq``/``tsEq`` filter), so the checks run
+    only on an empty answer (:func:`_answer_is_empty`). ``answer`` is the
+    caller's collected result of ``compile_query(df, qm)``; without it,
+    the first row is fetched here — one job, and only for queries that
+    have a check to make. ``exists(tag=…, ts=…) -> bool`` is the
+    presence probe; it must see the table the index lookups would see,
+    not the range-pruned ``df``. It defaults to a scan of ``df``, which
+    is right when ``df`` is the whole table. On a hit no probe runs; an
+    empty scalar ``avg`` raises without one.
     """
     out = compile_query(df, qm)
-    if strict:
-        # Presence errors are INDEX-MEMBERSHIP probes following the
-        # reference's dispatch (see needs_presence_probe — tagEq probes
-        # fire for GROUPED queries too, Tag.hs:61-67):
-        # * tagEq probes sIx[tag] ignoring time bounds (Tag.hs:61-64);
-        # * tagEq+tsEq then probes sIx[tag][ts] → the *timestamp* error
-        #   (Tag.hs:65-67);
-        # * tsEq without tagEq probes tIx[ts] only on the TS path, i.e.
-        #   not when groupBy=tag (groupTag filters misses silently).
-        # membership probes must see the WHOLE table — callers that hand
-        # in a pre-pruned df (e.g. the engine's manifest-bounded read)
-        # supply the unpruned relation separately
-        probe_df = presence_df if presence_df is not None else df
+    if not strict or not (needs_presence_probe(qm) or _is_scalar_avg(qm)):
+        return out
+    if answer is None:
+        answer = out.limit(1).collect()
+    if not _answer_is_empty(qm, answer):
+        return out
+    if exists is None:
 
-        def exists(pred) -> bool:
-            return probe_df.filter(pred).limit(1).count() > 0
+        def exists(tag=None, ts=None) -> bool:
+            pred = F.lit(True)
+            if tag is not None:
+                pred = pred & (F.col("tag") == F.lit(tag))
+            if ts is not None:
+                pred = pred & (F.col("timestamp") == F.lit(ts))
+            return not df.filter(pred).isEmpty()
 
-        from timeseries_db_spark import wire
+    from timeseries_db_spark import wire
 
-        tag_c, ts_c = F.col("tag"), F.col("timestamp")
-        if qm.tag_eq is not None:
-            if not exists(tag_c == F.lit(qm.tag_eq)):
-                raise QueryError(wire.no_data_tag(qm.tag_eq))
-            if qm.ts_eq is not None and not exists(
-                (tag_c == F.lit(qm.tag_eq)) & (ts_c == F.lit(qm.ts_eq))
-            ):
-                raise QueryError(wire.no_data_ts(qm.ts_eq))
-        elif needs_presence_probe(qm):  # tag_eq is None here → the ts path
-            if not exists(ts_c == F.lit(qm.ts_eq)):
-                raise QueryError(wire.no_data_ts(qm.ts_eq))
-        # avg over an empty (range-filtered) selection → the monoid fold
-        # has no identity → "Average failed." (Utils.hs:66-69). Grouped
-        # avg never errors: empty groups simply don't materialize
-        # (`fromMaybe 0 . getAverage` on the toQRG path, Queries.hs:150).
-        if qm.agg_func is Agg.AVG and qm.group_by is None:
-            pred = filter_expr(qm)
-            if (df.filter(pred) if pred is not None else df).limit(1).count() == 0:
-                raise QueryError(wire.avg_failed())
+    # Presence errors are INDEX-MEMBERSHIP probes following the
+    # reference's dispatch (see needs_presence_probe — tagEq probes
+    # fire for GROUPED queries too, Tag.hs:61-67), in its order:
+    # * tagEq probes sIx[tag] ignoring time bounds (Tag.hs:61-64);
+    # * tagEq+tsEq then probes sIx[tag][ts] → the *timestamp* error
+    #   (Tag.hs:65-67);
+    # * tsEq without tagEq probes tIx[ts] only on the TS path, i.e.
+    #   not when groupBy=tag (groupTag filters misses silently).
+    if qm.tag_eq is not None:
+        if not exists(tag=qm.tag_eq):
+            raise QueryError(wire.no_data_tag(qm.tag_eq))
+        if qm.ts_eq is not None and not exists(tag=qm.tag_eq, ts=qm.ts_eq):
+            raise QueryError(wire.no_data_ts(qm.ts_eq))
+    elif needs_presence_probe(qm):  # tag_eq is None here → the ts path
+        if not exists(ts=qm.ts_eq):
+            raise QueryError(wire.no_data_ts(qm.ts_eq))
+    # avg over an empty selection → the monoid fold has no identity →
+    # "Average failed." (Utils.hs:66-69). Grouped avg never errors:
+    # empty groups simply don't materialize (`fromMaybe 0 . getAverage`
+    # on the toQRG path, Queries.hs:150).
+    if _is_scalar_avg(qm):
+        raise QueryError(wire.avg_failed())
     return out
