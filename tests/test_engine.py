@@ -34,6 +34,11 @@ def test_collect_rows_wire_shape(eng):
         {"timestamp": T0 + 1, "tag": "munich", "value": 3.0},
         {"timestamp": T0, "tag": "munich", "value": 1.0},
     ]
+    # Int64 bounds past the calendar (years 1-9999) prune nothing
+    everything = eng.query_json({})
+    assert len(everything) == 4
+    for bound in ({"lt": 2**63 - 1}, {"ge": -(2**62)}, {"le": 253402300800000}):
+        assert eng.query_json(bound) == everything, bound
 
 
 def test_scalar_and_grouped_wire_shapes(eng):
@@ -80,6 +85,8 @@ def test_illegal_query_combinations(eng):
         eng.query({"tsEq": 1, "lt": 5})
     with pytest.raises(IllegalQueryError, match="Unknown query fields"):
         eng.query({"aggFunc": "sum", "bogus": 1})
+    with pytest.raises(IllegalQueryError, match="'gt' expects an integer"):
+        eng.query({"gt": 2**70})  # wider than Int64
 
 
 def test_data_dependent_errors(eng):

@@ -5,6 +5,10 @@ response bodies, 400 error texts (both wire modes), CORS headers."""
 from __future__ import annotations
 
 import json
+import os
+import socket
+import subprocess
+import sys
 import threading
 import urllib.error
 import urllib.request
@@ -262,6 +266,27 @@ def test_nonfinite_numeric_fields_get_400(served):
         assert status == 400, literal
 
 
+def test_malformed_content_length_gets_400(served):
+    """A non-integer or negative Content-Length is a 400 over a raw
+    socket — not a 500, and not a handler blocked on ``read(-1)`` until
+    the client hangs up."""
+    port = int(served.rsplit(":", 1)[1])
+    for declared in (b"abc", b"-1"):
+        with socket.create_connection(("127.0.0.1", port), timeout=20) as sock:
+            sock.sendall(
+                b"POST /timeseries/query HTTP/1.1\r\nHost: localhost\r\n"
+                b"Content-Type: application/json\r\n"
+                b"Content-Length: " + declared + b"\r\n\r\n{}"
+            )
+            reply = b""
+            while b"\r\n" not in reply:
+                chunk = sock.recv(4096)
+                if not chunk:
+                    break
+                reply += chunk
+        assert reply.startswith(b"HTTP/1.1 400 "), (declared, reply)
+
+
 def test_history_and_restore_routes(spark, tmp_path):
     """Extension routes: GET /timeseries/history lists versions; POST
     /timeseries/restore rolls back as a new commit; bad bodies and
@@ -295,3 +320,43 @@ def test_history_and_restore_routes(spark, tmp_path):
     finally:
         httpd.shutdown()
         thread.join(timeout=5)
+
+
+#: everything the four routes need; the rest of the package is off-route
+CORE_MODULES = {
+    "timeseries_db_spark",
+    "timeseries_db_spark.engine",
+    "timeseries_db_spark.operators",
+    "timeseries_db_spark.operators.dml",
+    "timeseries_db_spark.plans",
+    "timeseries_db_spark.plans.compiler",
+    "timeseries_db_spark.schema",
+    "timeseries_db_spark.server",
+    "timeseries_db_spark.session",
+    "timeseries_db_spark.wire",
+}
+
+
+def test_serving_path_loads_only_core_modules(tmp_path):
+    """Import the server, insert through TsdbEngine, then query, in a
+    fresh interpreter: every package module that got loaded is core."""
+    script = f"""
+import json, sys
+import timeseries_db_spark.server
+from timeseries_db_spark.engine import TsdbEngine
+from timeseries_db_spark.session import get_spark
+
+engine = TsdbEngine(get_spark("closure", shuffle_partitions=1), {str(tmp_path / "tbl")!r})
+engine.insert([{{"timestamp": 1000, "tag": "a", "value": 1.5}}])
+assert engine.query_json({{"tagEq": "a"}}) == [{{"timestamp": 1000, "tag": "a", "value": 1.5}}]
+print(json.dumps(sorted(m for m in sys.modules if m.split(".")[0] == "timeseries_db_spark")))
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=root,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-4000:]
+    loaded = set(json.loads(done.stdout.strip().splitlines()[-1]))
+    assert "timeseries_db_spark.server" in loaded
+    assert loaded <= CORE_MODULES, sorted(loaded - CORE_MODULES)

@@ -1,18 +1,23 @@
-"""timeseries_db_spark — a PySpark-native analytics engine with the query
-and data-processing capabilities of adrianotm/timeseries-db, rebuilt
-Spark-first (DataFrame/SQL + Catalyst + Structured Streaming).
+"""timeseries_db_spark — the adrianotm/timeseries-db time-series database
+rebuilt on PySpark.
 
-The reference (read-only at /root/reference) is a ~900-LoC in-RAM Haskell
-time-series DB: one fixed-schema table ``(timestamp, tag, value)``, two
-in-memory indexes, and a single query endpoint with ten composable
-parameters (see /root/repo/SURVEY.md).  This package re-expresses that
-capability surface — plus the large-scale training-data-pipeline operators
-(dedup, similarity search, text analysis, multimodal columns, streaming
-ingest) — on top of Spark's declarative engine, letting Catalyst/Tungsten
-supply the physical optimizations the reference hand-rolled
-(index range pruning → parquet predicate pushdown; monoid partial
-aggregation → HashAggregateExec partial/final; parBuffer group sparks →
-shuffle-partitioned hash aggregation).
+The reference is a ~900-line in-RAM Haskell database: one fixed-schema
+table ``(timestamp, tag, value)``, two in-memory indexes and four REST
+routes, one of them a query endpoint with ten composable parameters
+(see SURVEY.md). Here the same routes (:mod:`.server`) drive
+:class:`TsdbEngine`, which parses the query (:mod:`.schema`, with error
+texts from :mod:`.wire`), compiles it to a DataFrame plan
+(:mod:`.plans.compiler`) and runs it over :class:`~.operators.dml.TsTable`,
+a manifest-versioned, date-partitioned parquet table. Catalyst supplies
+the physical optimizations the reference hand-rolled: index range
+pruning becomes manifest and parquet pruning, monoid partial
+aggregation becomes partial/final hash aggregation.
+
+The serving path imports only those modules. The rest of the package is
+an operator library (analytics, dedup, similarity, text and multimodal
+operators, streaming ingest, codecs and file sources) that no route
+reaches; the driver-contract registry (:mod:`.registry`) and the tests
+exercise it.
 """
 
 from timeseries_db_spark.schema import (  # noqa: F401

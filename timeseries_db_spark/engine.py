@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import functools
 import os
-from collections.abc import Iterable, Mapping
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,8 +47,6 @@ from timeseries_db_spark.schema import (
     QueryModel,
     RowDecodeError,
 )
-
-Rows = "DataFrame | Iterable[Mapping]"
 
 
 class TsdbEngine:

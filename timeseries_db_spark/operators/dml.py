@@ -55,6 +55,7 @@ its current file set, with an atomically-swapped version pointer.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
@@ -101,11 +102,38 @@ class ConcurrentWriteError(Exception):
     unaffected — validation joins re-run against the new snapshot)."""
 
 
-def _with_dt(df: DataFrame) -> DataFrame:
-    """UTC date partition — the shared tz-independent day arithmetic
-    (sources.tables.utc_day_expr is the single definition)."""
-    from timeseries_db_spark.sources.tables import utc_day_expr
+DAY_MS = 86_400_000
 
+
+def utc_day_expr(ts_col: str):
+    """UTC date from epoch-millis via pure integer day arithmetic — the
+    ONE definition of the partition-date invariant (session-timezone
+    independent; ``to_date(timestamp_millis(...))`` renders in session tz
+    and desynchronizes writer and reader)."""
+    days = F.floor(F.col(ts_col) / DAY_MS).cast("int")
+    return F.date_add(F.lit("1970-01-01").cast("date"), days)
+
+
+def utc_day_of_ms(ms: int) -> datetime.date:
+    """Python twin of :func:`utc_day_expr` for manifest-side pruning.
+    Raises ``OverflowError`` outside the years 1-9999."""
+    return datetime.date(1970, 1, 1) + datetime.timedelta(days=ms // DAY_MS)
+
+
+def _prune_day(ms: int | None) -> datetime.date | None:
+    """The UTC day of a pruning bound, or None — prune nothing on that
+    side — when there is no bound or it lies outside the calendar. Any
+    Int64 is a legal bound; the exact row-level filter still applies."""
+    if ms is None:
+        return None
+    try:
+        return utc_day_of_ms(ms)
+    except OverflowError:
+        return None
+
+
+def _with_dt(df: DataFrame) -> DataFrame:
+    """UTC date partition column (see :func:`utc_day_expr`)."""
     return df.withColumn("dt", utc_day_expr("timestamp"))
 
 
@@ -360,18 +388,13 @@ class TsTable:
                 if keep:
                     partitions[dt] = keep
         only: set[str] | None = None
-        if lo_ms is not None or hi_ms is not None:
-            import datetime as _dt
-
-            from timeseries_db_spark.sources.tables import utc_day_of_ms
-
-            lo_d = utc_day_of_ms(lo_ms) if lo_ms is not None else None
-            hi_d = utc_day_of_ms(hi_ms) if hi_ms is not None else None
+        lo_d, hi_d = _prune_day(lo_ms), _prune_day(hi_ms)
+        if lo_d is not None or hi_d is not None:
             only = {
                 dt
                 for dt in partitions
-                if (lo_d is None or _dt.date.fromisoformat(dt) >= lo_d)
-                and (hi_d is None or _dt.date.fromisoformat(dt) <= hi_d)
+                if (lo_d is None or datetime.date.fromisoformat(dt) >= lo_d)
+                and (hi_d is None or datetime.date.fromisoformat(dt) <= hi_d)
             }
         return self._read_partitions(partitions, only=only)
 
@@ -684,8 +707,6 @@ class TsTable:
         when the cutoff falls exactly on a day boundary. Dropped files
         stay on disk for time travel (``read(version=...)`` of an older
         version still sees them); :meth:`vacuum` reclaims them."""
-        from timeseries_db_spark.sources.tables import utc_day_of_ms
-
         m = self._manifest()
         manifest, base = m["partitions"], m["version"]
         cutoff_day = str(utc_day_of_ms(before_ms))
@@ -693,7 +714,7 @@ class TsTable:
         merged = {
             dt: list(dirs) for dt, dirs in manifest.items() if dt > cutoff_day
         }
-        if before_ms % 86_400_000 == 0:
+        if before_ms % DAY_MS == 0:
             # cutoff at a day boundary: the cutoff day itself survives whole
             if cutoff_day in manifest:
                 merged[cutoff_day] = list(manifest[cutoff_day])

@@ -50,7 +50,6 @@ _AGG_SQL = {
     Agg.MIN: "min(value)",
     Agg.MAX: "max(value)",
 }
-_ROUNDED = {Agg.SUM, Agg.AVG}
 
 
 def _round_result(df: DataFrame) -> DataFrame:
@@ -61,25 +60,6 @@ def _round_result(df: DataFrame) -> DataFrame:
     from timeseries_db_spark.functions.numeric import duck_round
 
     return df.withColumn("result", duck_round(F.col("result"), 4))
-
-
-def _tsdb_query(qm: QueryModel, table: str = "events") -> QueryFn:
-    src = events_as_tsdb if table == "events" else lineitem_as_tsdb
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # qm is passed to the source too: its bounds are re-expressed in the
-        # raw column domain so they reach the parquet scan as PushedFilters
-        # (see sources.tables.push_ts_bounds).
-        out = compile_query(src(spark, sf_dir, qm), qm)
-        if qm.agg_func in _ROUNDED:
-            out = _round_result(out)
-        return out
-
-    return run
-
-
-def _oracle(qm_where: str, select: str, tail: str = "", table_sql: str = EVENTS_T) -> str:
-    return f"WITH t AS ({table_sql}) SELECT {select} FROM t {qm_where} {tail}".strip()
 
 
 def _range_where(qm: QueryModel) -> str:

@@ -57,13 +57,6 @@ def _fx_query(qm: QueryModel):
     return run
 
 
-def _fx_oracle(select: str, where: str = "", tail: str = "") -> str:
-    return (
-        f"WITH t AS ({timeseries_fixture_sql()}) "
-        f"SELECT {select} FROM t {where} {tail}"
-    ).strip()
-
-
 def dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 insert + W2 update + W3 delete + W4 truncate + W5 retention
     expiry on a fresh TsTable, then read the final snapshot. Seeded from

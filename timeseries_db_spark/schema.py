@@ -196,7 +196,13 @@ class QueryModel:
                         f"Field '{field}' expects an integer, got {v!r}."
                     )
                 kwargs[field] = int(v)
-            elif isinstance(v, bool) or not isinstance(v, int):
+            elif (
+                isinstance(v, bool)
+                or not isinstance(v, int)
+                or not -(2**63) <= v < 2**63
+            ):
+                # Int64 like the reference's Int; a wider JSON integer
+                # would otherwise reach Spark literals and date pruning
                 raise IllegalQueryError(
                     f"Field '{field}' expects an integer, got {v!r}."
                 )

@@ -86,7 +86,13 @@ class _Handler(BaseHTTPRequestHandler):
         pass
 
     def _body(self):
-        length = int(self.headers.get("Content-Length") or 0)
+        declared = self.headers.get("Content-Length") or "0"
+        if not (declared.isascii() and declared.isdigit()):
+            # the body's extent is unknown: answer, then drop the connection
+            # (rfile.read(-1) would block until the client hangs up)
+            self.close_connection = True
+            raise _BadRequest(f"Malformed Content-Length: {declared!r}.")
+        length = int(declared)
         raw = self.rfile.read(length) if length else b""
         if not raw.strip():
             return None

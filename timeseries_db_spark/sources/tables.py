@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timeseries_db_spark.operators.dml import utc_day_expr, utc_day_of_ms
+
 TABLES = (
     "region",
     "nation",
@@ -45,26 +47,6 @@ TABLES = (
 #: table is standard practice). Transformations never mutate the cached
 #: plan.
 _table_cache: dict[tuple[str, str, str], DataFrame] = {}
-
-
-
-DAY_MS = 86_400_000
-
-
-def utc_day_expr(ts_col: str):
-    """UTC date from epoch-millis via pure integer day arithmetic — the
-    ONE definition of the partition-date invariant (session-timezone
-    independent; ``to_date(timestamp_millis(...))`` renders in session tz
-    and desynchronizes writer and reader)."""
-    days = F.floor(F.col(ts_col) / DAY_MS).cast("int")
-    return F.date_add(F.lit("1970-01-01").cast("date"), days)
-
-
-def utc_day_of_ms(ms: int):
-    """Python twin of :func:`utc_day_expr` for manifest-side pruning."""
-    import datetime as _dt
-
-    return _dt.date(1970, 1, 1) + _dt.timedelta(days=ms // DAY_MS)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
