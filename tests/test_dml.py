@@ -213,6 +213,8 @@ def test_partitioning_is_timezone_independent(spark, tmp_path):
     spark.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati")  # +14
     try:
         e = TsdbEngine(spark, str(tmp_path / "tz"))
+        # the engine's own session carries the caller's zone over
+        assert e.spark.conf.get("spark.sql.session.timeZone") == "Pacific/Kiritimati"
         noon = T0 + DAY // 2  # 2024-01-01T12:00Z → local date 2024-01-02
         e.insert([{"timestamp": noon, "tag": "a", "value": 1.0}])
         # point query must find the row despite the +14h local-date skew

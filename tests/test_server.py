@@ -96,6 +96,24 @@ def test_insert_query_update_delete_roundtrip(served):
     _, body, _ = _call(served, "POST", "/timeseries/query", {})
     assert len(json.loads(body)) == 2
 
+    # a whole-number value is a Double on the wire (aeson decodes 5 as
+    # 5.0, and JSON.stringify(5.0) sends 5) — on insert and on update
+    status, body, _ = _call(
+        served, "POST", "/timeseries", [{"timestamp": 3000, "tag": "a", "value": 5}]
+    )
+    assert (status, body) == (200, "[]")
+    status, body, _ = _call(
+        served, "PUT", "/timeseries", [{"timestamp": 3000, "tag": "a", "value": 6}]
+    )
+    assert (status, body) == (200, "[]")
+    _, body, _ = _call(served, "POST", "/timeseries/query", {"tsEq": 3000})
+    assert body == '[{"timestamp": 3000, "tag": "a", "value": 6.0}]'
+    # an int no double can hold stays a 400
+    status, _, _ = _call(
+        served, "POST", "/timeseries", [{"timestamp": 4000, "tag": "a", "value": 10**400}]
+    )
+    assert status == 400
+
 
 def test_http_400_error_texts_both_wire_modes(served):
     # illegal combo: modern text by default
@@ -251,19 +269,30 @@ def test_integral_float_bounds_accepted_like_aeson(served):
 def test_nonfinite_numeric_fields_get_400(served):
     """Code-review r8: json.loads accepts Infinity/NaN; int(inf) raises
     OverflowError — the finiteness check must turn these into 400s, not
-    500s."""
+    500s. In an insert or update body they are a 400 too: a stored NaN
+    would be served back as invalid JSON."""
+    _call(served, "POST", "/timeseries", [{"timestamp": 5000, "tag": "nf", "value": 1.0}])
     for literal in ("Infinity", "-Infinity", "NaN"):
-        body = ('{"gt": ' + literal + ', "aggFunc": "count"}').encode()
-        req = urllib.request.Request(
-            served + "/timeseries/query", data=body, method="POST",
-            headers={"Content-Type": "application/json"},
-        )
-        try:
-            with urllib.request.urlopen(req) as resp:
-                status = resp.status
-        except urllib.error.HTTPError as exc:
-            status = exc.code
-        assert status == 400, literal
+        for method, path, body in (
+            ("POST", "/timeseries/query", '{"gt": ' + literal + ', "aggFunc": "count"}'),
+            ("POST", "/timeseries", '[{"timestamp": 6000, "tag": "nf", "value": ' + literal + "}]"),
+            ("PUT", "/timeseries", '[{"timestamp": 5000, "tag": "nf", "value": ' + literal + "}]"),
+        ):
+            req = urllib.request.Request(
+                served + path, data=body.encode(), method=method,
+                headers={"Content-Type": "application/json"},
+            )
+            try:
+                with urllib.request.urlopen(req) as resp:
+                    status = resp.status
+            except urllib.error.HTTPError as exc:
+                status = exc.code
+            assert status == 400, (literal, method, path)
+    # nothing was stored: the table still answers in strict JSON
+    status, body, _ = _call(served, "POST", "/timeseries/query", {"tagEq": "nf"})
+    assert (status, json.loads(body)) == (
+        200, [{"timestamp": 5000, "tag": "nf", "value": 1.0}]
+    )
 
 
 def test_malformed_content_length_gets_400(served):

@@ -1,8 +1,9 @@
 """The query read path: one snapshot relation per query, and presence
 probes only when the answer is empty.
 
-* a hit costs the same Spark jobs at 1 and at 8 live commits (the
-  snapshot is one parquet relation over the manifest's leaf dirs);
+* every hit is exactly 1 Spark job, at 1 and at 8 live commits (the
+  snapshot is one parquet relation over the manifest's leaf dirs) and
+  past the leaf count at which Spark would list files in a job;
 * ``TsdbEngine.query_json`` — answer first, manifest-pruned probes —
   keeps exactly the error contract of the eager ``run_query`` over the
   whole table, including a leaf whose tag set is too large for stats.
@@ -65,37 +66,62 @@ def _jobs(spark, fn):
 
 
 def test_hit_jobs_do_not_grow_with_live_commits(spark, tmp_path):
+    """Every hit shape is 1 job at 1 and 8 live commits, and again once a
+    45-day commit takes the snapshot past 40 leaf dirs (Spark's default
+    would list more than 32 in a job of its own); misses keep their
+    texts. The engine serves from its own session, so the caller's
+    keeps AQE and whole-stage codegen."""
     path = str(tmp_path / "pin")
-    table = TsTable.create(spark, path, auto_compact_commits=0)
+    TsTable.create(spark, path)
     eng = TsdbEngine(spark, path)
-    eng.table = table
+    eng.table = table = TsTable(eng.spark, path, auto_compact_commits=0)
     hits = {
         "point": {"tsEq": T0 + DAY + 5 * MINUTE, "tagEq": "b"},
         "rows": {"tagEq": "a", "ge": T0, "le": T0 + DAY, "limit": 20},
+        "scalar": {"aggFunc": "avg"},
+        "group_tag": {"aggFunc": "count", "groupBy": "tag"},
+        "group_ts": {"aggFunc": "sum", "groupBy": "timestamp", "sort": "desc",
+                     "limit": 20},
     }
     misses = {
         "tag": ({"tagEq": "Oslo"}, wire.no_data_tag("Oslo")),
         "ts": ({"tsEq": T0 + 7, "tagEq": "a"}, wire.no_data_ts(T0 + 7)),
-        "avg": ({"aggFunc": "avg", "gt": T0 + 10 * DAY}, wire.avg_failed()),
+        "avg": ({"aggFunc": "avg", "gt": T0 + 90 * DAY}, wire.avg_failed()),
     }
-    jobs: dict[int, dict[str, int]] = {}
-    for commits in (1, 8):
-        while table.live_commit_count() < commits:
-            eng.insert(_batch(table.live_commit_count()))
-        assert table.live_commit_count() == commits
-        jobs[commits] = {}
+    wide = [  # 3-6 h past midnight: clear of every _batch minute
+        {"timestamp": T0 + d * DAY + (3 + h) * 60 * MINUTE, "tag": "e",
+         "value": float(h)}
+        for d in range(45) for h in range(4)
+    ]
+    jobs: dict[int | str, dict[str, int]] = {}
+    for stage in (1, 8, "wide"):
+        if stage == "wide":
+            eng.insert(wide)
+            leaves = table._manifest()["partitions"].values()
+            assert sum(len(dirs) for dirs in leaves) > 40
+        else:
+            while table.live_commit_count() < stage:
+                eng.insert(_batch(table.live_commit_count()))
+            assert table.live_commit_count() == stage
+        jobs[stage] = {}
         for name, q in hits.items():
-            out, jobs[commits][name] = _jobs(spark, lambda: eng.query_json(q))
-            assert isinstance(out, list) and out, (commits, name, out)
+            out, jobs[stage][name] = _jobs(spark, lambda: eng.query_json(q))
+            shape = dict if name == "scalar" else list
+            assert isinstance(out, shape) and out, (stage, name, out)
         assert _jobs(spark, lambda: eng.query_json(hits["point"]))[0] == [
             {"timestamp": T0 + DAY + 5 * MINUTE, "tag": "b", "value": 5.0}
         ]
         for name, (q, text) in misses.items():
             with pytest.raises(QueryError) as exc:
                 eng.query_json(q)
-            assert str(exc.value) == text, (commits, name)
-    assert jobs[1] == jobs[8], jobs
-    assert max(jobs[1].values()) <= 2, jobs
+            assert str(exc.value) == text, (stage, name)
+    assert all(n == 1 for by_shape in jobs.values() for n in by_shape.values()), jobs
+    assert eng.query_json(hits["group_tag"]) == [
+        {"group": t, "result": 8 * 32.0} for t in "abcd"
+    ] + [{"group": "e", "result": 180.0}]
+    for key in ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage"):
+        assert spark.conf.get(key) == "true", key
+        assert eng.spark.conf.get(key) == "false", key
 
 
 # ---------- contract equivalence: query_json vs eager run_query ----------

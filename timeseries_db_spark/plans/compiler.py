@@ -143,6 +143,13 @@ def compile_query(df: DataFrame, qm: QueryModel) -> DataFrame:
     out = df.groupBy(F.col(key).alias(GROUP_COL)).agg(
         _agg_expr(qm.agg_func).alias(RESULT_COL)
     )
+    if qm.limit is None:
+        # sort every group in one partition: the scan and the partial
+        # aggregate keep their parallelism, only the final aggregate runs
+        # as one task (it never holds more than the driver collects), and
+        # the range exchange with its sampling job is gone. With a limit,
+        # TakeOrderedAndProject already needs no range exchange.
+        out = out.coalesce(1)
     # Reference sorts timestamp-keyed groups by traversal direction and
     # leaves tag-keyed groups in (nondeterministic) hash order; we always
     # order by group key for determinism (SURVEY.md §7.3).
@@ -196,9 +203,10 @@ def run_query(
     strict: bool = True,
     exists: Callable[..., bool] | None = None,
     answer: list | None = None,
-) -> DataFrame:
+) -> DataFrame | None:
     """Compile and, when ``strict``, enforce the reference's data-dependent
-    error contract (SURVEY.md §2.5) before returning the plan:
+    error contract (SURVEY.md §2.5) before returning the plan (``None``
+    when ``answer`` is given — no plan is built then):
 
     * ``tsEq``/``tagEq`` miss → ``"No data for timestamp/tag …"``
       (``Queries/TS.hs:64``, ``Queries/Tag.hs:64,67``);
@@ -208,15 +216,16 @@ def run_query(
     A non-empty answer already proves every presence the query names
     (its rows passed the ``tagEq``/``tsEq`` filter), so the checks run
     only on an empty answer (:func:`_answer_is_empty`). ``answer`` is the
-    caller's collected result of ``compile_query(df, qm)``; without it,
-    the first row is fetched here — one job, and only for queries that
-    have a check to make. ``exists(tag=…, ts=…) -> bool`` is the
-    presence probe; it must see the table the index lookups would see,
-    not the range-pruned ``df``. It defaults to a scan of ``df``, which
-    is right when ``df`` is the whole table. On a hit no probe runs; an
-    empty scalar ``avg`` raises without one.
+    caller's collected result of ``compile_query(df, qm)``, so only the
+    checks run; without it, the plan is compiled here and its first row
+    fetched — one job, and only for queries that have a check to make.
+    ``exists(tag=…, ts=…) -> bool`` is the presence probe; it must see
+    the table the index lookups would see, not the range-pruned ``df``.
+    It defaults to a scan of ``df``, which is right when ``df`` is the
+    whole table. On a hit no probe runs; an empty scalar ``avg`` raises
+    without one.
     """
-    out = compile_query(df, qm)
+    out = compile_query(df, qm) if answer is None else None
     if not strict or not (needs_presence_probe(qm) or _is_scalar_avg(qm)):
         return out
     if answer is None:

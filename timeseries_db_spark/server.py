@@ -70,8 +70,27 @@ def _ts_rows(payload, *, keys: tuple[str, ...]) -> list[tuple]:
             raise _BadRequest(
                 f"Each entry requires fields {list(keys)}: got {entry!r}."
             )
-        rows.append(tuple(entry[k] for k in keys))
+        rows.append(tuple(_wire_value(entry[k]) if k == "value" else entry[k]
+                          for k in keys))
     return rows
+
+
+def _wire_value(v):
+    """aeson decodes a whole JSON number such as ``5`` into the Double
+    ``value`` (and JavaScript sends ``5.0`` as ``5``), so an int becomes
+    a float here; a bool stays, for the schema check to reject."""
+    if isinstance(v, int) and not isinstance(v, bool):
+        try:
+            return float(v)
+        except OverflowError:
+            raise _BadRequest("Field 'value' is out of range for a double.") from None
+    return v
+
+
+def _reject_constant(name: str):
+    """``json.loads`` accepts ``NaN``/``Infinity``/``-Infinity``; they are
+    not JSON, and a stored one would be served back as invalid JSON."""
+    raise _BadRequest(f"Malformed JSON body: {name} is not a JSON number.")
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -97,7 +116,7 @@ class _Handler(BaseHTTPRequestHandler):
         if not raw.strip():
             return None
         try:
-            return json.loads(raw)
+            return json.loads(raw, parse_constant=_reject_constant)
         except json.JSONDecodeError as exc:
             raise _BadRequest(f"Malformed JSON body: {exc}.") from exc
 

@@ -5,6 +5,16 @@ conf here is chosen to also be correct on a multi-executor cluster at
 100 TB: AQE for runtime re-planning (partition coalescing, skew-join
 splitting), Arrow for the Pandas-UDF slow path, UTC session timezone so
 results are oracle-comparable and cluster-timezone-independent.
+
+These confs suit the operator library's large plans. ``TsdbEngine`` does
+not serve from this session as built: it serves from its own
+``newSession()`` with the caller's runtime SQL confs, AQE off and
+whole-stage codegen off (``engine._SERVING_CONF``). A read answers a few
+thousand rows at most, so its latency is per-job fixed cost: AQE runs
+each query stage as a job of its own (2 jobs for a scalar aggregate or a
+group-by instead of 1), and generating Java for each plan costs more than
+it saves on answers that small. The session returned here keeps AQE, so
+the library's plan tests see the plans they pin.
 """
 
 from __future__ import annotations
