@@ -5,12 +5,14 @@ limit) far beyond the hand-picked registry entries."""
 
 from __future__ import annotations
 
+import math
+
 import duckdb
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from timeseries_db_spark.plans.compiler import compile_query
+from timeseries_db_spark.plans.compiler import compile_query, filter_expr
 from timeseries_db_spark.schema import Agg, GroupBy, IllegalQueryError, QueryModel, Sort
 from timeseries_db_spark.sources.fixture import (
     BASE_TS,
@@ -109,3 +111,78 @@ def test_random_query_matches_oracle(spark, fields):
     assert len(g) == len(e), (len(g), len(e), fields)
     if len(g):
         pd.testing.assert_frame_equal(g, e, check_dtype=False, check_exact=False, rtol=1e-9)
+
+
+# ---------- compile_query (SQL text) against filter_expr (Columns) ----------
+
+
+def _fold(agg: Agg, values: list[float]):
+    """The aggregate over ``values`` as Spark defines it: NULL over no
+    rows except ``count``, which is a double."""
+    if agg is Agg.COUNT:
+        return float(len(values))
+    if not values:
+        return None
+    return {
+        Agg.SUM: sum,
+        Agg.AVG: lambda v: sum(v) / len(v),
+        Agg.MIN: min,
+        Agg.MAX: max,
+    }[agg](values)
+
+
+def expected_from_filter_expr(df, qm: QueryModel) -> list[tuple]:
+    """``qm``'s answer: the rows ``filter_expr`` selects, then sort,
+    aggregate and limit done in Python."""
+    pred = filter_expr(qm)
+    rows = [tuple(r) for r in (df if pred is None else df.filter(pred)).collect()]
+    desc = qm.sort is Sort.DESC
+    limit = None if qm.limit is None else max(0, qm.limit)
+    if qm.agg_func is None:
+        return sorted(rows, reverse=desc)[:limit]
+    if qm.group_by is None:
+        return [(_fold(qm.agg_func, [v for _, _, v in rows]),)]
+    key = 1 if qm.group_by is GroupBy.TAG else 0
+    groups: dict = {}
+    for r in rows:
+        groups.setdefault(r[key], []).append(r[2])
+    return [
+        (k, _fold(qm.agg_func, groups[k]))
+        for k in sorted(groups, reverse=desc)
+    ][:limit]
+
+
+def _same(a, b) -> bool:
+    if isinstance(a, float) and isinstance(b, float):
+        return math.isclose(a, b, rel_tol=1e-9)
+    return a == b
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    fields=qm_strategy,
+    limit=st.one_of(
+        st.none(), st.integers(-3, 50), st.integers(2**31 - 2, 2**63 - 1)
+    ),
+)
+@example(fields={"tag_eq": "Munich"}, limit=0)
+@example(fields={"tag_eq": "Munich", "sort": Sort.DESC}, limit=-1)
+@example(fields={"agg_func": Agg.COUNT, "group_by": GroupBy.TAG}, limit=2**31)
+@example(fields={"gt": BASE_TS + 4_990, "sort": Sort.DESC}, limit=2**63 - 1)
+def test_compile_query_matches_filter_expr(spark, fields, limit):
+    try:
+        qm = QueryModel(**{**fields, "limit": limit})
+    except IllegalQueryError:
+        return
+    df = timeseries_fixture(spark, N)
+    got = [tuple(r) for r in compile_query(df, qm).collect()]
+    exp = expected_from_filter_expr(df, qm)
+    assert len(got) == len(exp), (fields, limit, len(got), len(exp))
+    assert all(
+        len(g) == len(e) and all(_same(x, y) for x, y in zip(g, e))
+        for g, e in zip(got, exp)
+    ), (fields, limit, got[:5], exp[:5])

@@ -4,9 +4,12 @@ response bodies, 400 error texts (both wire modes), CORS headers."""
 
 from __future__ import annotations
 
+import http.client
 import json
 import os
 import socket
+import statistics
+import time
 import subprocess
 import sys
 import threading
@@ -229,6 +232,66 @@ def test_bad_typed_bodies_get_http_400_not_connection_drop(served):
     # the server must still be alive and serving afterwards
     status, _, _ = _call(served, "POST", "/timeseries/query", {"aggFunc": "count"})
     assert status == 200
+
+
+def test_limit_past_int32_answers_everything(served):
+    """The wire's limit is an Int64 and the reference's ``take n`` past
+    the data returns it all; Spark's LIMIT is an Int, so a limit of 2^31
+    or more must clamp, not answer 500."""
+    _call(served, "DELETE", "/timeseries")  # reset
+    _call(served, "POST", "/timeseries", ROWS)
+    status, body, _ = _call(
+        served, "POST", "/timeseries/query", {"tagEq": "a", "limit": 2**31}
+    )
+    assert (status, json.loads(body)) == (
+        200,
+        [{"timestamp": 1000, "tag": "a", "value": 1.5},
+         {"timestamp": 2000, "tag": "a", "value": 3.5}],
+    )
+    status, body, _ = _call(
+        served, "POST", "/timeseries/query",
+        {"aggFunc": "count", "groupBy": "tag", "limit": 2**40},
+    )
+    assert (status, json.loads(body)) == (
+        200, [{"group": "a", "result": 2.0}, {"group": "b", "result": 1.0}]
+    )
+
+
+def test_keepalive_replies_do_not_wait_on_delayed_ack():
+    """A reply is two small writes (headers, then body). With Nagle's
+    algorithm on, the body waits for the client's delayed ACK, about
+    40 ms per request on one keep-alive connection; with TCP_NODELAY a
+    reply from an engine that does no work takes a few ms."""
+
+    class StubEngine:
+        def query_json(self, qm):
+            return [{"timestamp": 1000, "tag": "a", "value": 1.5}]
+
+        def insert(self, rows):
+            pass
+
+    httpd = make_server(StubEngine(), port=0)
+    thread = threading.Thread(target=httpd.serve_forever, daemon=True)
+    thread.start()
+    conn = http.client.HTTPConnection("127.0.0.1", httpd.server_address[1], timeout=20)
+    headers = {"Content-Type": "application/json"}
+    requests = [("/timeseries/query", {"tagEq": "a"})] * 30 + [
+        ("/timeseries", ROWS)
+    ] * 5
+    try:
+        took = []
+        for path, payload in requests:
+            start = time.perf_counter()
+            conn.request("POST", path, json.dumps(payload), headers)
+            resp = conn.getresponse()
+            resp.read()
+            took.append(time.perf_counter() - start)
+            assert resp.status == 200
+    finally:
+        conn.close()
+        httpd.shutdown()
+        thread.join(timeout=5)
+    assert statistics.median(took) < 0.020, sorted(took)
 
 
 def test_internal_valueerror_is_500_not_400():

@@ -4,6 +4,9 @@ probes only when the answer is empty.
 * every hit is exactly 1 Spark job, at 1 and at 8 live commits (the
   snapshot is one parquet relation over the manifest's leaf dirs) and
   past the leaf count at which Spark would list files in a job;
+* a leaf-dir set's relation is reused across reads, never serves a
+  write's stale state, and the reuse cache stays bounded;
+* a tag travels as a SQL parameter, never as statement text;
 * ``TsdbEngine.query_json`` — answer first, manifest-pruned probes —
   keeps exactly the error contract of the eager ``run_query`` over the
   whole table, including a leaf whose tag set is too large for stats.
@@ -11,7 +14,10 @@ probes only when the answer is empty.
 
 from __future__ import annotations
 
+import concurrent.futures
+import datetime
 import math
+import sys
 import uuid
 
 import pytest
@@ -21,7 +27,7 @@ from pyspark.sql import functions as F
 from tests.test_property import qm_strategy
 from timeseries_db_spark import wire
 from timeseries_db_spark.engine import TsdbEngine
-from timeseries_db_spark.operators.dml import TsTable
+from timeseries_db_spark.operators.dml import RELATION_CACHE_MAX, TsTable
 from timeseries_db_spark.plans.compiler import GROUP_COL, RESULT_COL, run_query
 from timeseries_db_spark.schema import (
     TS_SCHEMA,
@@ -122,6 +128,107 @@ def test_hit_jobs_do_not_grow_with_live_commits(spark, tmp_path):
     for key in ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage"):
         assert spark.conf.get(key) == "true", key
         assert eng.spark.conf.get(key) == "false", key
+
+
+def test_reused_relations_never_serve_stale_snapshots(spark, tmp_path):
+    """Reads of one snapshot share its relation; after every kind of
+    write the next answer shows that write; the reuse cache never holds
+    more than RELATION_CACHE_MAX relations."""
+    path = str(tmp_path / "reuse")
+    TsTable.create(spark, path)
+    eng = TsdbEngine(spark, path)
+    eng.table = table = TsTable(eng.spark, path, auto_compact_commits=0)
+    mirror: dict[tuple[int, str], float] = {}
+    everything = {}
+    by_tag = {"aggFunc": "sum", "groupBy": "tag"}
+
+    def check():
+        assert len(table._relations) <= RELATION_CACHE_MAX
+        assert eng.query_json(everything) == [
+            {"timestamp": ts, "tag": tag, "value": mirror[ts, tag]}
+            for ts, tag in sorted(mirror)
+        ]
+        sums: dict[str, float] = {}
+        for (_, tag), value in mirror.items():
+            sums[tag] = sums.get(tag, 0.0) + value
+        assert eng.query_json(by_tag) == [
+            {"group": tag, "result": sums[tag]} for tag in sorted(sums)
+        ]
+
+    def insert(rows):
+        eng.insert(rows)
+        mirror.update({(r["timestamp"], r["tag"]): r["value"] for r in rows})
+
+    insert(_batch(0))
+    check()
+    assert table.read() is table.read()  # one relation per snapshot
+    v1 = eng.version()
+    insert(_batch(1))
+    check()
+    eng.update([{"timestamp": T0 + MINUTE, "tag": "b", "value": -1.0}])
+    mirror[T0 + MINUTE, "b"] = -1.0
+    check()
+    eng.delete([{"timestamp": T0 + DAY, "tag": "c"}])
+    del mirror[T0 + DAY, "c"]
+    check()
+    table.compact()
+    check()
+    eng.truncate()
+    mirror.clear()
+    check()
+    eng.restore(v1)
+    mirror.update({(r["timestamp"], r["tag"]): r["value"] for r in _batch(0)})
+    check()
+
+    # one leaf per day: each one-day range is a leaf set of its own. Read
+    # every day twice from more threads than cores, switching often
+    days = RELATION_CACHE_MAX + 8
+    insert([{"timestamp": T0 + (10 + d) * DAY, "tag": "e", "value": float(d)}
+            for d in range(days)])
+
+    def read_day(d: int) -> list[str]:
+        lo = T0 + (10 + d) * DAY
+        files = table.read(lo_ms=lo, hi_ms=lo + DAY - 1).inputFiles()
+        assert len(table._relations) <= RELATION_CACHE_MAX
+        return files
+
+    order = list(range(days)) * 2
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with concurrent.futures.ThreadPoolExecutor(max_workers=8) as pool:
+            files = list(pool.map(read_day, order, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    for d, day_files in zip(order, files):
+        dt = datetime.date(2024, 1, 11) + datetime.timedelta(days=d)
+        assert day_files and all(f"/dt={dt}/" in f for f in day_files), (d, day_files)
+    assert len(table._relations) == RELATION_CACHE_MAX
+    check()
+
+
+#: tags that would change a statement spliced from text: quote,
+#: backslash, comment, a parameter marker, a format field, a newline
+AWKWARD_TAGS = ["o'brien", "back\\slash", "a--b", ":tag_eq", "{snap}", "two\nlines"]
+
+
+def test_tags_are_parameters_not_statement_text(spark, tmp_path):
+    eng = TsdbEngine(spark, str(tmp_path / "awkward"))
+    eng.insert([{"timestamp": T0 + i, "tag": tag, "value": float(i)}
+                for i, tag in enumerate(AWKWARD_TAGS)])
+    for i, tag in enumerate(AWKWARD_TAGS):
+        assert eng.query_json({"tagEq": tag}) == [
+            {"timestamp": T0 + i, "tag": tag, "value": float(i)}
+        ]
+        assert eng.query_json({"tagEq": tag, "aggFunc": "count"}) == {"result": 1.0}
+    assert eng.query_json({"aggFunc": "max", "groupBy": "tag"}) == [
+        {"group": tag, "result": float(AWKWARD_TAGS.index(tag))}
+        for tag in sorted(AWKWARD_TAGS)
+    ]
+    for tag in ("x' OR '1'='1", "a' --", ":ts_eq", "{snap}}", "\n", "o'brien\\"):
+        with pytest.raises(QueryError) as exc:
+            eng.query_json({"tagEq": tag})
+        assert str(exc.value) == wire.no_data_tag(tag), tag
 
 
 # ---------- contract equivalence: query_json vs eager run_query ----------

@@ -59,7 +59,9 @@ import datetime
 import json
 import os
 import shutil
+import threading
 import uuid
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,6 +80,13 @@ MAX_ERRORS = 10  # reference: `take 10 errors`, Handlers.hs:55,65,89
 #: one — amortized O(1) files per day partition, the same small-file
 #: reasoning as Delta/Iceberg auto-OPTIMIZE.
 AUTO_COMPACT_COMMITS = 16
+
+#: Snapshot relations a table keeps for reuse, one per distinct set of
+#: leaf dirs (see :meth:`TsTable._read_partitions`). Readers of one
+#: version ask for a few sets — the whole table, a range of days, a tag's
+#: leaves — and a write retires only the sets that held the leaves it
+#: replaced or grew, so a few dozen cover the live working set.
+RELATION_CACHE_MAX = 32
 
 
 class DmlError(Exception):
@@ -154,6 +163,10 @@ class TsTable:
         #: commit-count ceiling before a write triggers compact();
         #: None/0 disables auto-compaction
         self.auto_compact_commits = auto_compact_commits
+        #: sorted leaf dirs → their parquet relation, least recently used
+        #: first
+        self._relations: OrderedDict[tuple[str, ...], DataFrame] = OrderedDict()
+        self._relations_lock = threading.Lock()
 
     # ---------- commit protocol ----------
 
@@ -336,16 +349,32 @@ class TsTable:
         and launches no job to build the plan; no ``dt`` column is
         carried (writes recompute it from the timestamp). No leaf dirs →
         an empty relation; ``limit(0)`` plans it as an empty local
-        relation, which Catalyst folds away without a job."""
-        leaf_dirs = sorted(
+        relation, which Catalyst folds away without a job.
+
+        A relation is reused for the same sorted leaf dirs, since
+        resolving one lists every dir on the driver. Reuse cannot serve
+        stale data: a published leaf dir is never written again, and
+        every write that adds or replaces leaves changes the set. The
+        ``RELATION_CACHE_MAX`` most recently used sets are kept."""
+        key = tuple(sorted(
             os.path.join(self.path, "commits", rel)
             for dt, rels in partitions.items()
             if only is None or dt in only
             for rel in rels
-        )
-        if not leaf_dirs:
+        ))
+        if not key:
             return self.spark.createDataFrame([], TS_SCHEMA).limit(0)
-        return self.spark.read.schema(TS_SCHEMA).parquet(*leaf_dirs)
+        with self._relations_lock:
+            rel = self._relations.get(key)
+            if rel is not None:
+                self._relations.move_to_end(key)
+                return rel
+        rel = self.spark.read.schema(TS_SCHEMA).parquet(*key)
+        with self._relations_lock:
+            self._relations[key] = rel
+            if len(self._relations) > RELATION_CACHE_MAX:
+                self._relations.popitem(last=False)
+        return rel
 
     def read(
         self,
@@ -585,9 +614,7 @@ class TsTable:
         for dt, dirs in new_parts.items():
             merged.setdefault(dt, [])
             merged[dt] = merged[dt] + dirs
-        self._publish(
-            merged, base, {**self._manifest().get("tag_stats", {}), **new_stats}
-        )
+        self._publish(merged, base, {**m.get("tag_stats", {}), **new_stats})
         self._maybe_auto_compact()
 
     def _rewrite_partitions(self, touched: set[str], new_data: DataFrame) -> None:

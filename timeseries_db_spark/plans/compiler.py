@@ -1,14 +1,15 @@
-"""QueryModel → DataFrame compiler.
+"""QueryModel → one parameterized Spark SQL statement.
 
 The reference compiles its ten-field query record straight to a single
 monoid fold over one of two in-memory indexes (``Queries.hs:171-180``,
-``Queries/Utils.hs:90-96``).  Here the same record compiles to a
-declarative DataFrame chain and Catalyst supplies, for free, everything
-the reference hand-rolled (SURVEY.md §4):
+``Queries/Utils.hs:90-96``), with no planning step. Here the same record
+compiles to ONE ``spark.sql`` statement over the snapshot relation, and
+Catalyst supplies, for free, everything the reference hand-rolled
+(SURVEY.md §4):
 
 * timestamp-index PATRICIA-trie range pruning (``DataS/IntMap.hs:36-62``)
-  → parquet predicate pushdown + row-group min/max skipping + partition
-  pruning when the table is laid out time-partitioned;
+  → parquet predicate pushdown + row-group min/max skipping (the
+  manifest has already pruned date partitions, ``TsTable.read``);
 * access-path selection (``Queries.hs:171-180``) → Catalyst scan
   planning — no custom rule;
 * column pruning (value column in its own unboxed vector, ``Model.hs:94``)
@@ -18,11 +19,15 @@ the reference hand-rolled (SURVEY.md §4):
   the reference's ``Average {count,sum}`` monoid;
 * lazy top-k (``Queries/TS.hs:21-24``) → ``TakeOrderedAndProject``.
 
-Scale note (100 TB): every query below is a filter→agg pipeline whose
-only shuffle is the group-by exchange; filters and the 1-3 column
-projection reach the scan, so the engine reads only the pruned byte
-range.  Group-by-tag on skewed tags relies on partial aggregation (map
-side combines the skew away before the shuffle) + AQE skew handling.
+Why one statement: a read hit is one Spark job, so the cost of building
+its plan is a large share of its latency. Building the plan column by
+column costs a py4j round trip per column, literal and operator, and
+every intermediate Dataset is analysed eagerly: a point ``query_json``
+made 184 round trips that way, and makes about 20 with one statement,
+which is parsed and analysed once. Every bound, ``tagEq`` and limit is
+bound through ``args`` as a named parameter, never spliced into the
+text, so no tag can change the statement; the text depends only on
+which fields are set.
 
 Result shapes (``QueryR`` union, reference ``Model.hs:63-74``):
 
@@ -48,27 +53,30 @@ from timeseries_db_spark.schema import Agg, GroupBy, QueryError, QueryModel, Sor
 GROUP_COL = "grp"
 RESULT_COL = "result"
 
+#: Spark's LIMIT is an Int; the wire's is an Int64, and the reference's
+#: ``take n`` with n past the data returns everything, so larger limits
+#: clamp here
+MAX_LIMIT = 2**31 - 1
 
-def _agg_expr(agg: Agg) -> Column:
-    if agg is Agg.COUNT:
-        # count is a Double in the reference (Model.hs:66, Queries.hs:166)
-        return F.count(F.lit(1)).cast("double")
-    if agg is Agg.SUM:
-        return F.sum("value")
-    if agg is Agg.AVG:
-        return F.avg("value")
-    if agg is Agg.MIN:
-        return F.min("value")
-    if agg is Agg.MAX:
-        return F.max("value")
-    raise ValueError(f"unknown agg {agg}")
+_AGG_SQL = {
+    # count is a Double in the reference (Model.hs:66, Queries.hs:166)
+    Agg.COUNT: "CAST(count(1) AS DOUBLE)",
+    Agg.SUM: "sum(value)",
+    Agg.AVG: "avg(value)",
+    Agg.MIN: "min(value)",
+    Agg.MAX: "max(value)",
+}
+
+#: range bounds as (QueryModel field, SQL operator); the field name is
+#: also the parameter name
+_BOUNDS = (("gt", ">"), ("ge", ">="), ("lt", "<"), ("le", "<="))
 
 
 def filter_expr(qm: QueryModel) -> Column | None:
     """Range/point predicate — the nine bound combinations compiled by the
-    reference's ``qmToF`` (``Queries/Utils.hs:21-30``) plus tag equality.
-    Expressed as plain column comparisons so Catalyst pushes them into the
-    parquet scan (the Spark replacement for index-subtree pruning)."""
+    reference's ``qmToF`` (``Queries/Utils.hs:21-30``) plus tag equality —
+    as a DataFrame Column, for callers that filter a DataFrame themselves.
+    :func:`compile_query` states the same predicate in SQL."""
     preds: list[Column] = []
     ts = F.col("timestamp")
     if qm.ts_eq is not None:
@@ -94,71 +102,79 @@ def filter_expr(qm: QueryModel) -> Column | None:
 
 def compile_query(df: DataFrame, qm: QueryModel) -> DataFrame:
     """Compile ``qm`` against a tsdb-shaped DataFrame
-    ``(timestamp:long, tag:string, value:double)``.
+    ``(timestamp:long, tag:string, value:double)`` as one SQL statement.
 
     Purely declarative — no action is triggered; callers that need the
     reference's data-dependent errors (``"No data for tag …"``,
     ``"Average failed."``) use :func:`run_query` which layers those checks.
     """
-    pred = filter_expr(qm)
-    if pred is not None:
-        df = df.filter(pred)
+    args: dict[str, int | str] = {}
+    where: list[str] = []
+    if qm.ts_eq is not None:
+        args["ts_eq"] = qm.ts_eq
+        where.append("`timestamp` = :ts_eq")
+    else:
+        for name, op in _BOUNDS:
+            if (bound := getattr(qm, name)) is not None:
+                args[name] = bound
+                where.append(f"`timestamp` {op} :{name}")
+    if qm.tag_eq is not None:
+        args["tag_eq"] = qm.tag_eq
+        where.append("tag = :tag_eq")
+    direction = "ASC" if qm.sort is Sort.ASC else "DESC"
+    # a sort in one partition plans no range exchange (a sampling job and
+    # a map stage); with a limit, TakeOrderedAndProject already needs none
+    one_partition = "/*+ COALESCE(1) */ "
+    group = order = ""
 
     if qm.agg_func is None:
-        # CollectR: raw rows, ordered by timestamp (reference O1); tag as
-        # secondary key for a deterministic total order under `limit`
-        # (reference order within equal timestamps is insertion order —
-        # nondeterministic for our purposes).
-        out = df.select("timestamp", "tag", "value")
-        if qm.ts_eq is not None and qm.limit is None:
-            # one timestamp holds at most one row per tag: sort it in a
-            # single partition, skipping the range exchange (a sampling
-            # job and a map stage) a global sort would plan
-            out = out.coalesce(1)
+        # CollectR: raw rows, ordered by timestamp (reference O1). The
         # (timestamp, tag, value) total order: (timestamp, tag) alone is a
         # key only under the tsdb uniqueness invariant — raw views built on
         # ms-truncated sources can carry ties, and a limit cutting through
-        # a tie group must pick the same rows as the oracle
-        keys = [F.col("timestamp"), F.col("tag"), F.col("value")]
-        out = out.orderBy(
-            *[k.asc() if qm.sort is Sort.ASC else k.desc() for k in keys]
+        # a tie group must pick the same rows as the oracle. Only a point
+        # query sorts in one partition: one timestamp holds at most one
+        # row per tag.
+        hint = one_partition if qm.ts_eq is not None and qm.limit is None else ""
+        select = f"{hint}`timestamp`, tag, value"
+        order = ", ".join(
+            f"{col} {direction}" for col in ("`timestamp`", "tag", "value")
         )
-        if qm.limit is not None:
-            # sort+limit → Catalyst TakeOrderedAndProject (distributed top-k,
-            # no global sort materialization) — the scalable analog of the
-            # reference's lazy-fold short-circuit (Queries/TS.hs:21-24).
-            out = out.limit(max(0, qm.limit))  # take(-1) = [] in the reference
-        return out
-
-    if qm.group_by is None:
+    elif qm.group_by is None:
         # AggR: single scalar. Catalyst prunes the scan to the value column
         # (+ pushed filter columns) — the reference's unboxed-vector fast
         # path (queryVec, Queries.hs:160-169) falls out of column pruning.
-        return df.agg(_agg_expr(qm.agg_func).alias(RESULT_COL))
+        select = f"{_AGG_SQL[qm.agg_func]} AS {RESULT_COL}"
+    else:
+        # [GroupAggR]: (grp, result) per group. Hash aggregate,
+        # partial+final; empty groups never materialize (the reference's
+        # per-tag sub-index folds, Queries/Tag.hs:35-53). Without a limit
+        # every group is sorted in one partition: only the final aggregate
+        # runs as one task, and it never holds more than the driver
+        # collects. The reference leaves tag-keyed groups in hash order;
+        # we always order by group key for determinism (SURVEY.md §7.3).
+        key = "tag" if qm.group_by is GroupBy.TAG else "`timestamp`"
+        hint = one_partition if qm.limit is None else ""
+        select = (
+            f"{hint}{key} AS {GROUP_COL}, "
+            f"{_AGG_SQL[qm.agg_func]} AS {RESULT_COL}"
+        )
+        group = f" GROUP BY {key}"
+        order = f"{GROUP_COL} {direction}"
 
-    # [GroupAggR]: (grp, result) per group. Hash aggregate, partial+final;
-    # empty groups never materialize (same semantics as the reference's
-    # per-tag sub-index folds, Queries/Tag.hs:35-53).
-    key = "tag" if qm.group_by is GroupBy.TAG else "timestamp"
-    out = df.groupBy(F.col(key).alias(GROUP_COL)).agg(
-        _agg_expr(qm.agg_func).alias(RESULT_COL)
-    )
-    if qm.limit is None:
-        # sort every group in one partition: the scan and the partial
-        # aggregate keep their parallelism, only the final aggregate runs
-        # as one task (it never holds more than the driver collects), and
-        # the range exchange with its sampling job is gone. With a limit,
-        # TakeOrderedAndProject already needs no range exchange.
-        out = out.coalesce(1)
-    # Reference sorts timestamp-keyed groups by traversal direction and
-    # leaves tag-keyed groups in (nondeterministic) hash order; we always
-    # order by group key for determinism (SURVEY.md §7.3).
-    out = out.orderBy(
-        F.col(GROUP_COL).asc() if qm.sort is Sort.ASC else F.col(GROUP_COL).desc()
-    )
-    if qm.limit is not None:
-        out = out.limit(max(0, qm.limit))
-    return out
+    text = f"SELECT {select} FROM {{snap}}"
+    if where:
+        text += " WHERE " + " AND ".join(where)
+    text += group
+    if order:
+        text += f" ORDER BY {order}"
+        if qm.limit is not None:
+            # sort+limit → TakeOrderedAndProject (distributed top-k, no
+            # global sort) — the scalable analog of the reference's
+            # lazy-fold short-circuit (Queries/TS.hs:21-24); take(-1) = []
+            args["limit"] = min(max(0, qm.limit), MAX_LIMIT)
+            text += " LIMIT :limit"
+    return df.sparkSession.sql(text, args=args, snap=df)
 
 
 def needs_presence_probe(qm: QueryModel) -> bool:

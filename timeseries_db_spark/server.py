@@ -98,6 +98,10 @@ class _Handler(BaseHTTPRequestHandler):
     engine = None
     write_lock: threading.Lock = None
     protocol_version = "HTTP/1.1"
+    # TCP_NODELAY: a reply leaves as two small writes (headers, then
+    # body), and with Nagle on the body waits for the client's delayed
+    # ACK — about 40 ms on every keep-alive reply
+    disable_nagle_algorithm = True
 
     # ---- plumbing ----
 
