@@ -4,6 +4,7 @@ probes only when the answer is empty.
 * every hit is exactly 1 Spark job, at 1 and at 8 live commits (the
   snapshot is one parquet relation over the manifest's leaf dirs) and
   past the leaf count at which Spark would list files in a job;
+* a limit at or past Spark's top-k threshold is still 1 job;
 * a leaf-dir set's relation is reused across reads, never serves a
   write's stale state, and the reuse cache stays bounded;
 * a tag travels as a SQL parameter, never as statement text;
@@ -128,6 +129,35 @@ def test_hit_jobs_do_not_grow_with_live_commits(spark, tmp_path):
     for key in ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage"):
         assert spark.conf.get(key) == "true", key
         assert eng.spark.conf.get(key) == "false", key
+
+
+def test_limits_past_the_top_k_threshold_stay_one_job(spark, tmp_path):
+    """Spark plans ``TakeOrderedAndProject`` only for a limit below
+    ``spark.sql.execution.topKSortFallbackThreshold`` (2^31 - 16); at or
+    above it a sorted read falls back to a global sort and costs 3 or 4
+    jobs.
+    The compiler clamps every limit below that threshold, so a rows and a
+    group-by-timestamp read with a limit of 2^31 - 1 or 2^40 stay 1 job
+    and still return every row."""
+    path = str(tmp_path / "limits")
+    TsTable.create(spark, path)
+    eng = TsdbEngine(spark, path)
+    rows = _batch(0) + _batch(1)
+    eng.insert(rows)
+    expected_rows = sorted(rows, key=lambda r: (r["timestamp"], r["tag"]))
+    sums: dict[int, float] = {}
+    for r in rows:
+        sums[r["timestamp"]] = sums.get(r["timestamp"], 0.0) + r["value"]
+    expected_groups = [
+        {"group": ts, "result": sums[ts]} for ts in sorted(sums, reverse=True)
+    ]
+    for limit in (2**31 - 1, 2**40):
+        out, jobs = _jobs(spark, lambda: eng.query_json({"limit": limit}))
+        assert (jobs, out) == (1, expected_rows), limit
+        q = {"aggFunc": "sum", "groupBy": "timestamp", "sort": "desc",
+             "limit": limit}
+        out, jobs = _jobs(spark, lambda: eng.query_json(q))
+        assert (jobs, out) == (1, expected_groups), limit
 
 
 def test_reused_relations_never_serve_stale_snapshots(spark, tmp_path):

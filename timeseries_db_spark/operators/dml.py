@@ -51,6 +51,17 @@ its current file set, with an atomically-swapped version pointer.
 * ``compact()`` folds accumulated commits back to one per partition —
   the manifest is the unit of truth, so compaction is also just a
   commit + pointer swap.
+* **Every data file is zstd-compressed with Parquet v2 data pages**
+  (:data:`WRITE_OPTIONS`). v2 pages store the timestamp column
+  DELTA_BINARY_PACKED and tag and value RLE_DICTIONARY, and zstd
+  shrinks the low-entropy doubles that snappy leaves almost as they
+  are. The 200,001-row demo leaf falls from 806,534 B (4.0 B/row; its
+  dense millisecond timestamps alone were 802,402 B stored PLAIN) to
+  4,309 B, with 922 B of timestamps; perfbench's ``mixed_http`` table,
+  write history included, falls from 6.6 to 2.9 B/row. Readers need no
+  option: one relation mixes snappy/v1 files written before this
+  layout with zstd/v2 ones, and rewrites and compactions convert a
+  table's older files as they go.
 """
 
 from __future__ import annotations
@@ -87,6 +98,12 @@ AUTO_COMPACT_COMMITS = 16
 #: leaves — and a write retires only the sets that held the leaves it
 #: replaced or grew, so a few dozen cover the live working set.
 RELATION_CACHE_MAX = 32
+
+#: Parquet writer options for every data file the table writes (see
+#: "Storage design" above); :meth:`TsTable._write_commit` is the only
+#: writer of table parquet, for insert, update, delete, compact and
+#: expire alike.
+WRITE_OPTIONS = {"compression": "zstd", "parquet.writer.version": "v2"}
 
 
 class DmlError(Exception):
@@ -490,7 +507,8 @@ class TsTable:
             _with_dt(df.select("timestamp", "tag", "value"))
             .repartition("dt")
             .sortWithinPartitions("dt", "tag", "timestamp")
-            .write.partitionBy("dt")
+            .write.options(**WRITE_OPTIONS)
+            .partitionBy("dt")
             .parquet(out_dir)
         )
         parts: dict[str, list[str]] = {}

@@ -8,8 +8,12 @@ Catalyst supplies, for free, everything the reference hand-rolled
 (SURVEY.md §4):
 
 * timestamp-index PATRICIA-trie range pruning (``DataS/IntMap.hs:36-62``)
-  → parquet predicate pushdown + row-group min/max skipping (the
-  manifest has already pruned date partitions, ``TsTable.read``);
+  → the manifest's day and tag pruning (``TsTable.read``), which is
+  the index here, then the pushed-down row filter. Parquet row-group
+  min/max skipping adds little at these sizes: every leaf file is one
+  row group (200,001 rows on the demo table, 6,144 a day on perfbench's
+  30-day table), so it can only skip a whole file, and it splits a file
+  only past the 128 MB parquet block size;
 * access-path selection (``Queries.hs:171-180``) → Catalyst scan
   planning — no custom rule;
 * column pruning (value column in its own unboxed vector, ``Model.hs:94``)
@@ -55,8 +59,12 @@ RESULT_COL = "result"
 
 #: Spark's LIMIT is an Int; the wire's is an Int64, and the reference's
 #: ``take n`` with n past the data returns everything, so larger limits
-#: clamp here
-MAX_LIMIT = 2**31 - 1
+#: clamp here. The clamp sits just below
+#: ``spark.sql.execution.topKSortFallbackThreshold`` (default
+#: ``2**31 - 16``): Spark plans ``TakeOrderedAndProject`` only for a
+#: limit below it, and at or above it falls back to a global sort, whose
+#: range exchange and sampling make a read 3 or 4 jobs instead of 1
+MAX_LIMIT = 2**31 - 17
 
 _AGG_SQL = {
     # count is a Double in the reference (Model.hs:66, Queries.hs:166)
